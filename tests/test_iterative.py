@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from tuktu_spark.operators import make_operator, make_source
@@ -48,6 +49,120 @@ def test_connected_components_long_path_converges(spark):
     )
     out = connected_components(edges)
     assert set(r["component"] for r in out.collect()) == {0}
+
+
+def _union_find_components(edges):
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    base=st.lists(
+        st.tuples(st.integers(0, 15), st.integers(0, 15)), min_size=1, max_size=20
+    )
+)
+def test_connected_components_matches_union_find(spark, base):
+    # every graph carries duplicate edges, both directions and a self-loop
+    edges = base + [(b, a) for a, b in base[::2]] + base[:2] + [(base[0][0],) * 2]
+    rows = connected_components(
+        spark.createDataFrame(edges, "id_a long, id_b long")
+    ).collect()
+    got = {r["id"]: r["component"] for r in rows}
+    assert len(rows) == len(got)
+    assert got == _union_find_components(edges)
+
+
+def _components(spark, edges, **kw):
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    rows = connected_components(df, **kw).collect()
+    return sorted(
+        ((r["id"], r["component"]) for r in rows),
+        key=lambda t: (t[0] is None, t[0] or 0),
+    )
+
+
+@pytest.mark.parametrize(
+    "cap, expected",
+    [
+        (0, [(0, 0), (1, 1), (2, 2), (3, 3), (4, 4), (5, 5), (6, 6)]),
+        (1, [(0, 0), (1, 0), (2, 1), (3, 2), (4, 3), (5, 4), (6, 5)]),
+        (2, [(0, 0), (1, 0), (2, 0), (3, 1), (4, 2), (5, 3), (6, 4)]),
+    ],
+)
+def test_connected_components_capped_rounds(spark, cap, expected):
+    """A capped run returns the labels after exactly ``cap`` rounds of
+    min-label propagation (0 rounds: every node is its own component)."""
+    chain = [(i + 1, i) for i in range(6)]
+    assert _components(spark, chain, max_iterations=cap) == expected
+
+
+def test_connected_components_null_id(spark):
+    """A null endpoint becomes one null node with a null component; it
+    links nothing, and its neighbours keep their own labels."""
+    edges = [(1, 2), (None, 3), (3, 1), (None, None), (5, None), (6, 6)]
+    expected = [(1, 1), (2, 1), (3, 1), (5, 5), (6, 6), (None, None)]
+    for cap in (1, 20):
+        assert _components(spark, edges, max_iterations=cap) == expected
+
+
+def test_connected_components_one_action_per_round(spark):
+    """Two clusters of diameter 2 settle in two rounds plus the round
+    that sees no change. With the edges checkpointed once and the change
+    count observed inside each round's checkpoint, that is 1 + 2 + 5 + 5
+    jobs (adaptive execution runs each shuffle stage as its own job) plus
+    the collect; a second fixpoint job per round would push it past the
+    bound."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8), (9, 8)], "id_a long, id_b long"
+    )
+    group = "test_connected_components_one_action_per_round"
+    sc.setJobGroup(group, group)
+    try:
+        rows = connected_components(edges).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r["id"]: r["component"] for r in rows} == {
+        1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 7
+    }
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 16
+
+
+def test_fixpoint_count_leaves_session_serializable(spark):
+    """The per-round change count must not use a pyspark Observation: on
+    Spark 4.1 it leaves the session unserializable, and scoring with a
+    model that holds the session (logistic regression keeps its training
+    summary) then fails with NotSerializableException."""
+    from tuktu_spark.ml import models as M
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    assert len(connected_components(edges).collect()) == 3
+    df = spark.createDataFrame(
+        [(0.0, 1.0, 0.0), (1.0, 10.0, 1.0)] * 5, "f1 double, f2 double, y double"
+    )
+    model = M.train(df, "logistic_regression", feature_cols=["f1", "f2"], label_col="y")
+    scored = M.apply_model(df, model)
+    assert scored.filter(F.col("prediction") == F.col("y")).count() == 10
+
+
+def test_connected_components_unknown_algorithm(spark):
+    with pytest.raises(ValueError, match="stars"):
+        make_operator("connected_components", {"algorithm": "stars"})
 
 
 def test_concurrent_repartitions_by_anchor(spark):

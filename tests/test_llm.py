@@ -274,6 +274,61 @@ def test_verify_jaccard_engines_identical(spark):
         D._verify_jaccard_pairs(cands, h, h, "doc_id", 0.2, engine="bogus")
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text inside every ``lambdafunction(...)`` of a plan string."""
+    bodies, i = [], plan.find("lambdafunction(")
+    while i >= 0:
+        start = j = i + len("lambdafunction(")
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[start : j - 1])
+        i = plan.find("lambdafunction(", start)
+    return bodies
+
+
+def test_shingles_after_python_udf_tokenize_once(spark):
+    """The minhash pipeline's table: text from normalize_text (its NFC step
+    is a Python UDF), shingles read by the signature UDF. Catalyst then
+    collapses the token projection into the shingle expression, and no
+    per-shingle lambda may contain the tokenizer, or every document is
+    re-split once per shingle."""
+    from tuktu_spark.llm.text import normalize_text
+
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    h = D.hashed_shingles(normalize_text(df), "text", "doc_id", 3).withColumn(
+        "signature", D.minhash_signature_col(F.col("shingles"))
+    )
+    plan = h._jdf.queryExecution().optimizedPlan().toString()
+    bodies = _lambda_bodies(plan)
+    assert bodies and "split(" in plan
+    assert not [b for b in bodies if "split(" in b]
+
+
+def test_hashed_shingles_pinned_values(spark):
+    """Shingle hashes of edge-case documents, raw and after normalize_text,
+    pinned: a rewrite of the n-gram construction must not move them."""
+    from tuktu_spark.llm.text import normalize_text
+
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, "a b"), (5, "a b c"),
+         (6, " a  b c d a b c "), (7, "x\ty\nz w")],
+        "doc_id long, text string",
+    )
+    expected = {
+        1: [42],  # a null text keeps its single null shingle
+        2: [], 3: [], 4: [],
+        5: [-2167479932694485896],
+        6: [-2167479932694485896, 6117671922678514684,
+            2967759869102583125, 7939027373220391688],
+        7: [-9457663061986884, -735796498069460301],
+    }
+    for src in (df, normalize_text(df)):
+        got = {r["doc_id"]: r["shingles"] for r in D.hashed_shingles(src).collect()}
+        assert got == expected
+
+
 class TestDecontamination:
     def _corpus(self, spark):
         base = "w%d " * 20

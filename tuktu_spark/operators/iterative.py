@@ -18,6 +18,26 @@ from pyspark.sql import functions as F
 
 from .registry import operator
 
+_COUNT_METRIC = "tuktu_checkpoint_count"
+
+
+def _checkpoint_counting(df: DataFrame, condition) -> tuple[DataFrame, int]:
+    """``df.localCheckpoint()`` plus the number of its rows where
+    ``condition`` holds, counted by ``observe`` inside the checkpoint's own
+    job: a fixpoint loop pays one action per round, not a second job to
+    test whether the round changed anything.
+
+    The count is read from the executed plan's observed metrics, not
+    through a ``pyspark.sql.Observation``: on Spark 4.1 the first
+    Observation creates the session's ObservationManager, which is not
+    serializable, and from then on every task that captures the session
+    fails (e.g. scoring with a just-trained LogisticRegressionModel, whose
+    training summary holds the session)."""
+    observed = df.observe(_COUNT_METRIC, F.count(F.when(condition, 1)))
+    checkpointed = observed.localCheckpoint()
+    metrics = observed._jdf.queryExecution().observedMetrics()
+    return checkpointed, metrics.apply(_COUNT_METRIC).getLong(0)
+
 
 def bfs_expand(
     seed: DataFrame,
@@ -39,9 +59,11 @@ def bfs_expand(
             .select("root", F.col(child_col).alias("node"))
             .distinct()
         )
-        nxt = nxt.join(acc.select("root", "node"), ["root", "node"], "left_anti")
-        nxt = nxt.localCheckpoint()
-        if nxt.isEmpty():
+        nxt, found = _checkpoint_counting(
+            nxt.join(acc.select("root", "node"), ["root", "node"], "left_anti"),
+            F.lit(True),
+        )
+        if not found:
             break
         acc = acc.unionByName(nxt.withColumn("depth", F.lit(depth))).localCheckpoint()
         frontier = nxt
@@ -72,47 +94,52 @@ def connected_components(
     """(node, component) where component = min node id reachable via edges.
 
     Min-label propagation: each round every node takes the min of its own
-    and its neighbors' labels; stops at fixpoint. Rounds needed = graph
-    diameter — near-dup clusters are shallow, so a handful. Each round is
-    one join + one groupBy, both shuffling on node id; at web scale swap in
-    the large-star/small-star contraction (Kiveris et al.) which this API
+    and its neighbors' labels; stops at fixpoint or after
+    ``max_iterations`` rounds. Rounds needed = graph diameter — near-dup
+    clusters are shallow, so a handful. At web scale swap in the
+    large-star/small-star contraction (Kiveris et al.) which this API
     deliberately matches.
+
+    Cost: the symmetric edge set is materialised once (localCheckpoint),
+    so the input is read once however many rounds run. Round 1 needs no
+    labels (every node's label is its id) and is one groupBy over the
+    edges; every later round is one join + one groupBy. Each round is ONE
+    action, the localCheckpoint of its labels, which also counts the
+    labels it lowered (``observe``); the loop stops on a round that
+    lowered none. A null id keeps a null component.
     """
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionByName(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    labels = (
-        sym.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint()
+    if max_iterations < 1:
+        return sym.select(F.col("u").alias("id")).distinct().select(
+            "id", F.col("id").alias("component")
+        )
+    sym = sym.localCheckpoint()
+    labels, changed = _checkpoint_counting(
+        sym.groupBy("u").agg(
+            F.when(F.col("u").isNotNull(), F.least(F.col("u"), F.min("v"))).alias("comp")
+        ),
+        F.col("comp") < F.col("u"),
     )
-    for _ in range(max_iterations):
-        neigh = (
-            sym.join(labels, sym.v == labels.id)
-            .groupBy("u")
-            .agg(F.min("comp").alias("neigh_min"))
-        )
-        new_labels = (
-            labels.join(neigh, labels.id == neigh.u, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("neigh_min"), F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .isEmpty()
-        )
-        labels = new_labels
-        if changed:
+    for _ in range(max_iterations - 1):
+        if not changed:
             break
-    return labels.select(F.col("id"), F.col("comp").alias("component"))
+        # a node's own label and its neighbours' labels meet in ONE groupBy
+        own = labels.select("u", "comp", F.col("comp").alias("own"))
+        neigh = sym.join(labels.select(F.col("u").alias("v"), "comp"), "v").select(
+            "u", "comp", F.lit(None).alias("own")
+        )
+        labels, changed = _checkpoint_counting(
+            own.unionByName(neigh)
+            .groupBy("u")
+            .agg(
+                F.when(F.col("u").isNotNull(), F.min("comp")).alias("comp"),
+                F.min("own").alias("own"),
+            ),
+            F.col("comp") < F.col("own"),
+        )
+    return labels.select(F.col("u").alias("id"), F.col("comp").alias("component"))
 
 
 @operator("connected_components")
@@ -128,6 +155,8 @@ def connected_components_op(config: dict):
     algo = config.get("algorithm", "label")
     if algo == "star":
         return lambda df: connected_components_star(df, src, dst, max_iter)
+    if algo != "label":
+        raise ValueError(f"algorithm={algo!r}: expected 'label' or 'star'")
     return lambda df: connected_components(df, src, dst, max_iter)
 
 
