@@ -10,7 +10,11 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from tuktu_spark.operators import make_operator, make_source
-from tuktu_spark.operators.iterative import bfs_expand, connected_components
+from tuktu_spark.operators.iterative import (
+    _checkpoint_counting,
+    bfs_expand,
+    connected_components,
+)
 
 
 def test_bfs_expand_chain(spark):
@@ -158,6 +162,17 @@ def test_fixpoint_count_leaves_session_serializable(spark):
     model = M.train(df, "logistic_regression", feature_cols=["f1", "f2"], label_col="y")
     scored = M.apply_model(df, model)
     assert scored.filter(F.col("prediction") == F.col("y")).count() == 10
+
+
+def test_checkpoint_counting_counts_exactly(spark):
+    """The fixpoint loops stop on a zero count, so the helper must return
+    the exact count of the job that built the checkpoint, not a silent 0."""
+    df = spark.range(10).withColumn("k", F.col("id") % 3)
+    checkpointed, count = _checkpoint_counting(df, F.col("k") == 0)
+    assert count == 4
+    assert sorted(r["id"] for r in checkpointed.collect()) == list(range(10))
+    _, none = _checkpoint_counting(df, F.col("k") == 5)
+    assert none == 0
 
 
 def test_connected_components_unknown_algorithm(spark):

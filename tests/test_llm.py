@@ -317,7 +317,11 @@ def test_hashed_shingles_pinned_values(spark):
         "doc_id long, text string",
     )
     expected = {
-        1: [42],  # a null text keeps its single null shingle
+        # known defect, pinned only to keep this output unchanged: a null
+        # text gets one null shingle (hash 42) instead of none, so null
+        # texts match each other (FOUND entry in CHANGES.md); a fix
+        # changes this value
+        1: [42],
         2: [], 3: [], 4: [],
         5: [-2167479932694485896],
         6: [-2167479932694485896, 6117671922678514684,

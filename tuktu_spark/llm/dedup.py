@@ -89,13 +89,19 @@ def _shingles_from_tokens(toks, n: int):
     split into the shingle expression, and a per-shingle
     ``slice(toks, i, n)`` lambda then re-tokenized the whole document
     once per shingle — O(tokens^2) per doc, measured 2.5-3.0 s against
-    0.6-0.7 s for this form on a 1,549-doc corpus. Outside lambdas the
-    repeated reference is one common subexpression.
+    0.6-0.7 s for this form on a 1,549-doc corpus. The price is ``n``
+    full-length slices and one ``n``-field struct per gram: at n = 3 this
+    form is faster than the per-shingle slice on projected tokens, at
+    n = 13 (decontamination) 6-10 % slower.
 
     Docs with fewer than n tokens yield an EMPTY array, guarded by
     ``count < 1`` because a slice length must stay positive (real corpora
-    always contain short/empty documents). A null token array yields
-    ``[null]`` (the ``coalesce``), so a null text keeps one null shingle."""
+    always contain short/empty documents). Known defect, kept so that
+    the output stays bit-identical: a null token array yields ``[null]``
+    (the ``coalesce``), not an empty array, so every null text carries
+    the same one shingle and null texts match each other (recorded as a
+    FOUND entry in CHANGES.md). A fix drops the ``coalesce`` and changes
+    the pinned value in ``test_hashed_shingles_pinned_values``."""
     count = F.size(toks) - (n - 1)
     length = F.greatest(count, F.lit(1))
     # arrays_zip names the fields of unnamed inputs "0", "1", ...

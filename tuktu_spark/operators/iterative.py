@@ -32,7 +32,15 @@ def _checkpoint_counting(df: DataFrame, condition) -> tuple[DataFrame, int]:
     Observation creates the session's ObservationManager, which is not
     serializable, and from then on every task that captures the session
     fails (e.g. scoring with a just-trained LogisticRegressionModel, whose
-    training summary holds the session)."""
+    training summary holds the session).
+
+    This rests on ``localCheckpoint`` executing ``observed``'s own
+    QueryExecution, so that its ``observedMetrics`` hold the checkpoint
+    job's count. Were checkpoint to plan a fresh QueryExecution, the
+    metrics would be read from a plan that never ran and the count would
+    be 0 without an error, stopping every fixpoint loop after one round;
+    ``tests/test_iterative.py::test_checkpoint_counting_counts_exactly``
+    pins the count on a known input so such a change fails there."""
     observed = df.observe(_COUNT_METRIC, F.count(F.when(condition, 1)))
     checkpointed = observed.localCheckpoint()
     metrics = observed._jdf.queryExecution().observedMetrics()
